@@ -1925,10 +1925,8 @@ object Bench {
             stream2.addData(batchTexts(b))
             q2.processAllAvailable()
           }
-          if (kb.annIndexState == graft.core.KbStore.AnnStale)
-            kb.refreshAnnIndex()
-          if (kb.textIndexState == graft.core.KbStore.AnnStale)
-            kb.refreshTextIndex()
+          Seq(graft.core.KbStore.Ann, graft.core.KbStore.Text)
+            .foreach(kb.refreshIfStale)
         }
       } finally {
         try q2.stop() catch { case _: Throwable => () }

@@ -18,9 +18,11 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *
   * The store shape mirrors RefreshFastPathSpec: seed docs + every
   * index family, one micro-batch of adds + one delete, then each
-  * family's refresh. The full route is forced with the measurement
-  * kill switch (`graft.kb.forceFullRefreshDiff`) so both dumps come
-  * from the SAME store state. Run:
+  * family's refresh. The full route runs on a second store with the
+  * same mutations, forced the way RefreshFastPathSpec forces it:
+  * `vacuum(retain = 0)` before the refreshes prunes the manifest
+  * history the segment route's proof needs, while the live chain
+  * survives. Run:
   * `sbt "runMain graft.ProfileRefreshPlans"`.
   */
 object ProfileRefreshPlans {
@@ -109,11 +111,9 @@ object ProfileRefreshPlans {
     val kbSeg = mkStore(s"$base/seg")
     refreshAll(kbSeg, "segment")
 
-    System.setProperty("graft.kb.forceFullRefreshDiff", "true")
-    try {
-      val kbFull = mkStore(s"$base/full")
-      refreshAll(kbFull, "full")
-    } finally System.clearProperty("graft.kb.forceFullRefreshDiff")
+    val kbFull = mkStore(s"$base/full")
+    kbFull.vacuum(retain = 0)
+    refreshAll(kbFull, "full")
 
     spark.stop()
   }

@@ -96,10 +96,8 @@ object ProfileStreamIngest {
           stream2.addData(batchTexts(b))
           q2.processAllAvailable()
         }
-        if (kb.annIndexState == graft.core.KbStore.AnnStale)
-          kb.refreshAnnIndex()
-        if (kb.textIndexState == graft.core.KbStore.AnnStale)
-          kb.refreshTextIndex()
+        Seq(graft.core.KbStore.Ann, graft.core.KbStore.Text)
+          .foreach(kb.refreshIfStale)
         println(f"[profile-stream] fast 6x500 + one refresh: ${(System.nanoTime() - t0) / 1e9}%.2f s")
       } finally { try q2.stop() catch { case _: Throwable => () } }
       kb.buildDedupIndex()

@@ -234,25 +234,17 @@ final class KbStore private (
             .fold(w)(cols => w.partitionBy(cols: _*))
             .parquet(tableDir(name, next))
         }
-        var pointers = cur.table_versions ++ updated.keys.map(_ -> next)
         // a full rewrite replaces the whole table at the new version, so
         // any merge-on-read segment chain it had is obsolete
-        var bases = cur.table_bases -- updated.keys
-        var deltaChains = cur.table_deltas -- updated.keys
-        // a new embeddings version invalidates a batch-built ANN index:
-        // REPLACED vectors drop its pointers entirely (the dirs are
-        // reclaimed by the next vacuum); add/delete-only mutations pass
-        // `preserveIndex` and merely leave it STALE (older version than
-        // embeddings) — existing assignments stay valid and
-        // refreshAnnIndex() catches the index up incrementally
-        if (updated.contains("embeddings") &&
-            !updated.contains(KbStore.IvfAssignTable) && !preserveIndex) {
-          pointers = pointers -- KbStore.VectorIndexTables
-          bases = bases -- KbStore.VectorIndexTables
-          deltaChains = deltaChains -- KbStore.VectorIndexTables
-        }
-        val m = newMeta(cur).copy(version = next, table_versions = pointers,
-          table_bases = bases, table_deltas = deltaChains)
+        val m0 = newMeta(cur).copy(version = next,
+          table_versions = cur.table_versions ++ updated.keys.map(_ -> next),
+          table_bases = cur.table_bases -- updated.keys,
+          table_deltas = cur.table_deltas -- updated.keys)
+        val m =
+          if (updated.contains("embeddings") &&
+              !updated.contains(KbStore.IvfAssignTable) && !preserveIndex)
+            dropVectorFamilies(m0)
+          else m0
         prePublishHook()
         KbStore.writeMetaAtomic(path, m, expectVersion = Some(cur.version))
         metaCache = m
@@ -275,6 +267,18 @@ final class KbStore private (
           }
       }
     }
+  }
+
+  /** A new embeddings version that REPLACES vectors invalidates every
+    * vector-derived family: its pointers, bases and chains drop (the
+    * dirs are reclaimed by the next vacuum). Add/delete-only mutations
+    * pass `preserveIndex` instead and merely leave the families STALE
+    * — existing rows stay valid and [[refresh]] catches them up. */
+  private def dropVectorFamilies(m: KbMeta): KbMeta = {
+    val gone = KbStore.Families.filter(_.vectorDerived).flatMap(_.tables)
+    m.copy(table_versions = m.table_versions -- gone,
+      table_bases = m.table_bases -- gone,
+      table_deltas = m.table_deltas -- gone)
   }
 
   /** O(batch) sibling of [[commit]] (round 6, the 100 TB mutation
@@ -412,16 +416,14 @@ final class KbStore private (
         deltaChains += name ->
           (deltaChains.getOrElse(name, Seq.empty[Long]) :+ next)
       }
-      // same invalidation clause as the full commit: an embeddings
-      // patch without preserveIndex is a vector REPLACEMENT — the
-      // vector-derived families' pointers (and chains) drop
-      if (patches.contains("embeddings") && !preserveIndex) {
-        pointers = pointers -- KbStore.VectorIndexTables
-        bases = bases -- KbStore.VectorIndexTables
-        deltaChains = deltaChains -- KbStore.VectorIndexTables
-      }
-      val m = newMeta(cur).copy(version = next, table_versions = pointers,
+      val m0 = newMeta(cur).copy(version = next, table_versions = pointers,
         table_bases = bases, table_deltas = deltaChains)
+      // same invalidation clause as the full commit: an embeddings
+      // patch without preserveIndex is a vector REPLACEMENT
+      val m =
+        if (patches.contains("embeddings") && !preserveIndex)
+          dropVectorFamilies(m0)
+        else m0
       prePublishHook()
       KbStore.writeMetaAtomic(path, m, expectVersion = Some(cur.version))
       metaCache = m
@@ -1066,17 +1068,32 @@ final class KbStore private (
     val qv = Embeddings.checkMagnitude(provider.embed(Seq(query))).head
     index() match {
       case None => Seq.empty
-      case Some(idx) =>
-        val hits = idx.topK(qv, n) // (emb_id, score), reference tie order
-        if (hits.isEmpty) return Seq.empty
-        val embIds = hits.map(_._1)
-        val docByEmb = docs.filter($"emb_id".isin(embIds: _*))
-          .collect().map(d => d.emb_id.get -> d).toMap
-        hits.map { case (embId, score) =>
-          Retrieval(score, docByEmb(embId))
-        }
+      // (emb_id, score), reference tie order
+      case Some(idx) => retrievals(idx.topK(qv, n))
     }
   }
+
+  /** The docs join-back by embedding id, shared by every vector read:
+    * one filter over the docs chain for the few ids in `hits` —
+    * almost the whole cost of an exact [[retrieve]]. */
+  private def docsByEmbId(ids: collection.Seq[Long]): Map[Long, Doc] =
+    docs.filter($"emb_id".isin(ids.toSeq: _*))
+      .collect().map(d => d.emb_id.get -> d).toMap
+
+  /** The docs join-back by doc id (the lexical reads' keys). */
+  private def docsById(ids: collection.Seq[Long]): Map[Long, Doc] =
+    docs.filter($"id".isin(ids.toSeq: _*))
+      .collect().map(d => d.id -> d).toMap
+
+  /** `(emb_id, score)` hits in rank order, with their docs. */
+  private def retrievals(hits: collection.Seq[(Long, Double)])
+      : Seq[Retrieval] =
+    if (hits.isEmpty) Seq.empty
+    else {
+      val docByEmb = docsByEmbId(hits.map(_._1))
+      hits.toSeq.map { case (embId, score) =>
+        Retrieval(score, docByEmb(embId)) }
+    }
 
   /** §3.3 document_top_pairwise_scores (`kb.py:1642-1671`): exact
     * top-n pairs — without ever materializing the n×n matrix the
@@ -1104,34 +1121,45 @@ final class KbStore private (
     // build doc lookups for the few ids involved
     val rows = pairs.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    val ids = rows.flatMap(r => Seq(r._1, r._2)).distinct
-    val docByEmb = docs.filter($"emb_id".isin(ids: _*)).collect()
-      .map(d => d.emb_id.get -> d).toMap
+    val docByEmb = docsByEmbId(rows.flatMap(r => Seq(r._1, r._2)).distinct)
     rows.toSeq.map { case (i1, i2, s) => (s, docByEmb(i1), docByEmb(i2)) }
   }
 
   // ------------------------------------------------------------------
-  // persistent batch-built ANN index (SURVEY §7.5 — "Spark builds the
-  // vector index in batch"; no reference counterpart, its only index is
-  // the in-RAM matrix)
+  // derived-index families (KbStore.Families: ANN, SQ, PQ, text, dedup)
+  // — one lifecycle: freshness watermark, stale/missing guard, refresh
   // ------------------------------------------------------------------
-  /** Index lifecycle: `None` — never built or invalidated by vector
-    * replacement (rebuild required); `Stale` — docs were added/deleted
-    * since the build, existing assignments still valid
-    * ([[refreshAnnIndex]] catches up incrementally); `Current` —
-    * serves queries. Freshness is pure manifest arithmetic: the index
-    * is current iff its table version is at least the embeddings
-    * table's version.
+  /** Family lifecycle: `None` — never built, or dropped by a vector
+    * replacement (rebuild required); `Stale` — the source table moved
+    * since the family's last build or refresh, existing rows still
+    * valid ([[refresh]] catches up incrementally); `Current` — serves
+    * queries. Freshness is pure manifest arithmetic: a family is
+    * current iff its watermark table's version is at least its source
+    * table's.
     */
-  def annIndexState: KbStore.AnnState = {
+  private[graft] def state(f: KbStore.Family): KbStore.AnnState = {
     val tv = metaCache.table_versions
-    if (!tv.contains(KbStore.IvfAssignTable)) KbStore.AnnNone
-    else if (tv(KbStore.IvfAssignTable) >= tv("embeddings")) KbStore.AnnCurrent
-    else KbStore.AnnStale
+    tv.get(f.watermark) match {
+      case None => KbStore.AnnNone
+      case Some(v) if v >= tv(f.source) => KbStore.AnnCurrent
+      case _ => KbStore.AnnStale
+    }
   }
 
-  /** Whether a CURRENT ANN index exists (a stale one never serves). */
-  def hasAnnIndex: Boolean = annIndexState == KbStore.AnnCurrent
+  /** The guard every family read runs first: a stale or missing family
+    * refuses — silently-stale answers are worse than an error. */
+  private def requireCurrent(f: KbStore.Family): Unit = {
+    val s = state(f)
+    require(s == KbStore.AnnCurrent,
+      if (s == KbStore.AnnStale)
+        s"${f.label} is stale: call refresh${f.name}Index() to catch it up"
+      else s"no ${f.label}: call build${f.name}Index()")
+  }
+
+  /** Catch `f` up if it is stale; a missing or current family is left
+    * alone. */
+  private[graft] def refreshIfStale(f: KbStore.Family): Unit =
+    if (state(f) == KbStore.AnnStale) refresh(f)
 
   /** Net rows added to / keys removed from `table` strictly after
     * manifest version `since`, derived from the delta-segment chain
@@ -1150,45 +1178,19 @@ final class KbStore private (
     * micro-batch; the segment route reads exactly the delta files the
     * index missed.
     *
-    * WATERMARK INVARIANT (r13 advice): every caller passes
-    * `tv(indexTable)` as `since`, treating the index table's manifest
-    * version as a COVERAGE watermark over the data table. That is
-    * valid because every index-table writer (build*, refresh*) commits
-    * in the same manifest transaction that reads the data table's
-    * current head — an index row set at version V has, by
-    * construction, folded every data segment ≤ V. A future writer
-    * that bumps an index table's version WITHOUT covering the data
-    * table (e.g. a metadata-only rewrite of the postings layout) would
-    * silently skip rows here; such a writer must either keep the index
-    * version below the data table's or use a full rebuild path.
+    * WATERMARK INVARIANT (r13 advice): [[refresh]] passes the family's
+    * watermark version as `since`, treating it as a COVERAGE watermark
+    * over the source table. That is valid because every index-table
+    * writer (build*, refresh) commits in the same manifest transaction
+    * that reads the source table's current head — an index row set at
+    * version V has, by construction, folded every data segment ≤ V. A
+    * future writer that bumps an index table's version WITHOUT
+    * covering the data table (e.g. a metadata-only rewrite of the
+    * postings layout) would silently skip rows here; such a writer
+    * must either keep the index version below the data table's or use
+    * a full rebuild path.
     */
   private def changedSince(table: String, since: Long)
-      : Option[(DataFrame, DataFrame)] = {
-    // measurement-only kill switch (round 14 evidence debt): lets the
-    // profiling mains time the refresh paths with the segment route
-    // DISABLED (forcing every refresh onto the full keyed diff) so the
-    // O(corpus) → O(batch) claim has a recorded before/after on one
-    // tree. Never set outside a measurement run.
-    val r =
-      if (sys.props.get("graft.kb.forceFullRefreshDiff").contains("true") ||
-          sys.env.get("GRAFT_KB_FORCE_FULL_REFRESH_DIFF").contains("true"))
-        None
-      else changedSinceImpl(table, since)
-    // engagement probe (r13 verdict item 3): RefreshFastPathSpec's
-    // parity tests are vacuous if the fast path silently stops
-    // engaging (route parity with the fallback is then parity with
-    // itself) — the spec asserts this flag after each refresh
-    lastRefreshRoute = Some(if (r.isDefined) "segment" else "full")
-    r
-  }
-
-  /** Which route the most recent [[changedSince]] call resolved to:
-    * Some("segment") = delta-chain fast path proved exact,
-    * Some("full") = caller fell back to the full keyed diff,
-    * None = no refresh has derived changed ids yet. Test probe. */
-  private[graft] var lastRefreshRoute: Option[String] = None
-
-  private def changedSinceImpl(table: String, since: Long)
       : Option[(DataFrame, DataFrame)] = {
     val head = metaCache
     if (!head.table_versions.contains(table)) return None
@@ -1233,6 +1235,13 @@ final class KbStore private (
     Some((adds, dels.distinct()))
   }
 
+  /** Which route the most recent [[refresh]] took: Some("segment") =
+    * the delta-chain fast path proved exact, Some("full") = the full
+    * keyed diff, None = no stale family was refreshed yet. Test probe
+    * (RefreshFastPathSpec): route parity is vacuous if the fast path
+    * silently stops engaging. Single-writer, like the store. */
+  private[graft] var lastRefreshRoute: Option[String] = None
+
   /** Distinct keys of `table` rows tombstoned by any del segment in
     * the CURRENT head chain — the candidates for deleted-then-re-added
     * ids. Reads only the chain's (small) del files, never the base;
@@ -1249,7 +1258,7 @@ final class KbStore private (
     dels.reduceOption(_.unionByName(_)).map(_.distinct())
   }
 
-  /** The refresh fallbacks' full keyed diff, made re-add-aware (r13
+  /** The refresh fallback's full keyed diff, made re-add-aware (r13
     * verdict item 5): `live` is the data table projected to the index
     * key column `key` (plus payload columns), `storedKeys` the index
     * family's current key set. The plain diff —
@@ -1290,57 +1299,105 @@ final class KbStore private (
     }
   }
 
-  /** Catch a stale index up with the batch it missed: assignments of
-    * deleted ids drop (semi join against the live embeddings), new ids
-    * are assigned to the STORED centroids with the packed kernel, and
-    * the merged inverted-list table commits — O(changed docs) work plus
-    * one pass over the old assignment, no re-clustering. The "update
-    * the index in batch" half of the index story; no-op when current,
-    * error when no index survives (vector replacement requires
-    * [[buildAnnIndex]]).
+  /** The one refresh driver behind every `refresh*Index`: catch a stale
+    * family up with exactly the source rows it missed. Deleted keys
+    * tombstone, added rows go through the family's [[encode]] under
+    * the model its build stored (centroids, codebooks, tokenizer,
+    * MinHash parameters — never re-trained), and one delta commit
+    * publishes both: encode work and write volume are O(changed rows).
+    * A current family is a no-op; a missing one throws (vector
+    * replacement requires a rebuild).
     *
-    * Since round 13 the changed ids come from [[changedSince]]'s
-    * segment route when the manifests prove it exact — O(batch) IO,
-    * no corpus scan — with the original full anti-join pair as the
-    * fallback.
+    * The changed rows come from [[changedSince]]'s segment route
+    * when the manifests prove it exact — O(batch) IO,
+    * no corpus scan — with the re-add-aware full keyed diff
+    * ([[fullDiffWithReadds]]) as the fallback.
     */
-  def refreshAnnIndex(): Unit = annIndexState match {
+  private[graft] def refresh(f: KbStore.Family): Unit = state(f) match {
     case KbStore.AnnCurrent => ()
     case KbStore.AnnNone => throw new IllegalStateException(
-      "no ANN index to refresh — call buildAnnIndex()")
+      s"no ${f.label} to refresh — call build${f.name}Index()")
     case KbStore.AnnStale =>
-      import spark.implicits._
-      import graft.functions.FloatVecDot
-      import graft.functions.FloatVecPack.floatVecPack
-      // delta commit: tombstone assignments of deleted ids, append
-      // assignments of new ids — write volume O(changed), not O(index).
-      // Changed ids via the segment route when provable (O(batch) IO);
-      // full anti-join pair otherwise.
-      val (newEmb, removed) =
-        changedSince("embeddings",
-            metaCache.table_versions(KbStore.IvfAssignTable)) match {
-          case Some((adds, dels)) =>
-            (adds.select($"id".as("vec_id"), $"vec".as("embedding")),
-              dels.select($"id".as("vec_id")))
-          case None =>
-            val emb = embeddings.toDF()
-              .select($"id".as("vec_id"), $"vec".as("embedding"))
-            val old = read(KbStore.IvfAssignTable)
-            fullDiffWithReadds(emb, old.select($"vec_id"), "vec_id",
-              "embeddings")
-        }
-      val packedCents = read(KbStore.IvfCentroidsTable).collect()
-        .map { r =>
-          (r.getLong(0),
-            FloatVecDot.pack(r.getSeq[Double](1).map(_.toFloat).toArray))
-        }.toSeq.toDF("cid", "cvec")
-      val added = graft.ops.SimilaritySearch.ivfAssignPacked(
-        newEmb.select($"vec_id".as("id"), floatVecPack($"embedding").as("vec")),
-        packedCents)
-      commitDelta(Map(KbStore.IvfAssignTable ->
-        KbStore.TablePatch(del = Some(removed), add = Some(added))), identity,
-        readSet = Set("embeddings", KbStore.IvfCentroidsTable))
+      val segments = changedSince(f.source,
+        metaCache.table_versions(f.watermark))
+      lastRefreshRoute = Some(if (segments.isDefined) "segment" else "full")
+      val (adds, gone) = segments match {
+        case Some((a, d)) =>
+          (a.select(col("id").as(f.key), col(f.payload)),
+            d.select(col("id").as(f.key)))
+        case None =>
+          val live =
+            if (f.source == "embeddings") embeddings.toDF() else read(f.source)
+          fullDiffWithReadds(
+            live.select(col("id").as(f.key), col(f.payload)),
+            read(f.keyed.last).select(col(f.key)).distinct(),
+            f.key, f.source)
+      }
+      val enc = encode(f, adds)
+      try {
+        commitDelta(enc.adds.map { case (t, a) =>
+            t -> KbStore.TablePatch(del = Some(gone), add = Some(a)) },
+          identity, readSet = (f.source +: f.model).toSet)
+        enc.afterCommit(gone)
+      } finally enc.cached.foreach(_.unpersist(blocking = false))
   }
+
+  /** Each family's encode step: `rows` (key + payload column) become
+    * its keyed tables' rows under the model the build stored. */
+  private def encode(f: KbStore.Family,
+      rows: DataFrame): KbStore.Encoded = {
+    import graft.functions.FloatVecPack.floatVecPack
+    def packed = rows.select(col(f.key).as("id"),
+      floatVecPack(col("vec")).as("vec"))
+    f match {
+      case KbStore.Ann =>
+        import graft.functions.FloatVecDot
+        val cents = read(KbStore.IvfCentroidsTable).collect()
+          .map { r =>
+            (r.getLong(0),
+              FloatVecDot.pack(r.getSeq[Double](1).map(_.toFloat).toArray))
+          }.toSeq.toDF("cid", "cvec")
+        KbStore.Encoded(Map(KbStore.IvfAssignTable ->
+          graft.ops.SimilaritySearch.ivfAssignPacked(packed, cents)))
+      case KbStore.Sq =>
+        KbStore.Encoded(Map(KbStore.SqCodesTable ->
+          graft.ops.VectorQuant.sqEncodePacked(packed)
+            .withColumnRenamed("id", "vec_id")))
+      case KbStore.Pq =>
+        val added = graft.ops.VectorQuant.ivfPqEncode(
+            graft.ops.VectorQuant.ivfResiduals(packed, loadPqCents()),
+            loadPqBooks())
+          .withColumnRenamed("id", "vec_id")
+        // pinned to the pre-commit codes: the mirror upkeep needs the
+        // list ids of the rows the commit tombstones
+        KbStore.Encoded(Map(KbStore.IvfPqCodesTable -> added),
+          afterCommit = keepPqMirrorCurrent(added,
+            read(KbStore.IvfPqCodesTable),
+            metaCache.table_versions.get(KbStore.IvfPqCodesTable)))
+      case KbStore.Text => textEncode(rows, textIndexUnicode)
+      case KbStore.Dedup =>
+        val (k, nh, rpb, uni) = dedupParams
+        KbStore.Encoded(Map(KbStore.DedupBandsTable ->
+          dedupBandsFor(rows, k, nh, rpb, uni)))
+      case other => throw new IllegalArgumentException(
+        s"no encode step for the ${other.label}")
+    }
+  }
+
+  // ------------------------------------------------------------------
+  // persistent batch-built ANN index (SURVEY §7.5 — "Spark builds the
+  // vector index in batch"; no reference counterpart, its only index is
+  // the in-RAM matrix)
+  // ------------------------------------------------------------------
+  def annIndexState: KbStore.AnnState = state(KbStore.Ann)
+
+  /** Whether a CURRENT ANN index exists (a stale one never serves). */
+  def hasAnnIndex: Boolean = annIndexState == KbStore.AnnCurrent
+
+  /** Catch a stale index up with the batch it missed: new ids are
+    * assigned to the STORED centroids with the packed kernel — no
+    * re-clustering ([[refresh]]). */
+  def refreshAnnIndex(): Unit = refresh(KbStore.Ann)
 
   /** Build (or rebuild) the persistent IVF index as store tables:
     * centroids seeded deterministically (smallest md5-of-id corpus
@@ -1424,36 +1481,8 @@ final class KbStore private (
     * sequentially, so results are bit-identical — a spec asserts it).
     */
   def annRetrieve(query: String, n: Int, provider: EmbeddingProvider,
-      nProbe: Int = 8): Seq[Retrieval] = {
-    require(hasAnnIndex, annIndexState match {
-      case KbStore.AnnStale =>
-        "ANN index is stale: call refreshAnnIndex() to catch it up"
-      case _ => "no ANN index: call buildAnnIndex()"
-    })
-    if (n <= 0) return Seq.empty
-    import spark.implicits._
-    import graft.functions.FloatVecDot
-    import graft.functions.FloatVecDot.floatVecDot
-    import graft.functions.FloatVecPack.floatVecPack
-    val qv = Embeddings.checkMagnitude(provider.embed(Seq(query))).head
-    val probed = ivfProbeCids(qv, nProbe)
-    if (probed.isEmpty) return Seq.empty
-    val packed = embeddings.toDF()
-      .select($"id".as("vec_id"), floatVecPack($"vec").as("pv"))
-    val hits = read(KbStore.IvfAssignTable)
-      .where($"cid".isin(probed: _*))
-      .join(packed, "vec_id")
-      .select($"vec_id",
-        round(floatVecDot($"pv", lit(FloatVecDot.pack(qv))), 6).as("score"))
-      .where(!isnan($"score")) // NaN would sort above every real score
-      .orderBy(desc("score"), $"vec_id")
-      .limit(n)
-      .as[(Long, Double)].collect()
-    if (hits.isEmpty) return Seq.empty
-    val docByEmb = docs.filter($"emb_id".isin(hits.map(_._1): _*))
-      .collect().map(d => d.emb_id.get -> d).toMap
-    hits.toSeq.map { case (embId, score) => Retrieval(score, docByEmb(embId)) }
-  }
+      nProbe: Int = 8): Seq[Retrieval] =
+    annRetrieveWhere(query, n, provider, None, nProbe)
 
   /** Probe selection against the persisted centroid table: same
     * sequential double fold and (score desc, cid asc) tie order as
@@ -1490,39 +1519,37 @@ final class KbStore private (
     */
   def annRetrieveFiltered(query: String, n: Int,
       provider: EmbeddingProvider,
-      pred: org.apache.spark.sql.Column, nProbe: Int = 8): Seq[Retrieval] = {
-    require(hasAnnIndex, annIndexState match {
-      case KbStore.AnnStale =>
-        "ANN index is stale: call refreshAnnIndex() to catch it up"
-      case _ => "no ANN index: call buildAnnIndex()"
-    })
+      pred: org.apache.spark.sql.Column, nProbe: Int = 8): Seq[Retrieval] =
+    annRetrieveWhere(query, n, provider, Some(pred), nProbe)
+
+  private def annRetrieveWhere(query: String, n: Int,
+      provider: EmbeddingProvider, pred: Option[org.apache.spark.sql.Column],
+      nProbe: Int): Seq[Retrieval] = {
+    requireCurrent(KbStore.Ann)
     if (n <= 0) return Seq.empty
-    import spark.implicits._
     import graft.functions.FloatVecDot
     import graft.functions.FloatVecDot.floatVecDot
     import graft.functions.FloatVecPack.floatVecPack
     val qv = Embeddings.checkMagnitude(provider.embed(Seq(query))).head
     val probed = ivfProbeCids(qv, nProbe)
     if (probed.isEmpty) return Seq.empty
-    val allowed = docs.toDF().where(pred)
-      .where($"emb_id".isNotNull)
-      .select($"emb_id".as("vec_id"))
+    val lists = read(KbStore.IvfAssignTable).where($"cid".isin(probed: _*))
+    val scoped = pred.fold(lists) { p =>
+      val allowed = docs.toDF().where(p)
+        .where($"emb_id".isNotNull)
+        .select($"emb_id".as("vec_id"))
+      lists.join(allowed, "vec_id") // predicate before the dot kernel
+    }
     val packed = embeddings.toDF()
       .select($"id".as("vec_id"), floatVecPack($"vec").as("pv"))
-    val hits = read(KbStore.IvfAssignTable)
-      .where($"cid".isin(probed: _*))
-      .join(allowed, "vec_id") // predicate before the dot kernel
+    retrievals(scoped
       .join(packed, "vec_id")
       .select($"vec_id",
         round(floatVecDot($"pv", lit(FloatVecDot.pack(qv))), 6).as("score"))
-      .where(!isnan($"score"))
+      .where(!isnan($"score")) // NaN would sort above every real score
       .orderBy(desc("score"), $"vec_id")
       .limit(n)
-      .as[(Long, Double)].collect()
-    if (hits.isEmpty) return Seq.empty
-    val docByEmb = docs.filter($"emb_id".isin(hits.map(_._1): _*))
-      .collect().map(d => d.emb_id.get -> d).toMap
-    hits.toSeq.map { case (embId, score) => Retrieval(score, docByEmb(embId)) }
+      .as[(Long, Double)].collect())
   }
 
   /** Batch k-NN JOIN against the persisted ANN index: every row of
@@ -1537,11 +1564,7 @@ final class KbStore private (
     * (score desc, vec_id asc).
     */
   def knnJoin(queries: DataFrame, k: Int, nProbe: Int = 8): DataFrame = {
-    require(hasAnnIndex, annIndexState match {
-      case KbStore.AnnStale =>
-        "ANN index is stale: call refreshAnnIndex() to catch it up"
-      case _ => "no ANN index: call buildAnnIndex()"
-    })
+    requireCurrent(KbStore.Ann)
     import spark.implicits._
     import graft.functions.FloatVecPack.floatVecPack
     val centsDf = read(KbStore.IvfCentroidsTable)
@@ -1565,16 +1588,7 @@ final class KbStore private (
   // quantized codes — the scan tier that keeps a 100 TB corpus in 1/4
   // the memory, re-ranked exactly against the raw vectors
   // ------------------------------------------------------------------
-  /** Compressed-tier lifecycle, same manifest arithmetic as
-    * [[annIndexState]]: current iff the codes table's version is at
-    * least the embeddings table's.
-    */
-  def sqIndexState: KbStore.AnnState = {
-    val tv = metaCache.table_versions
-    if (!tv.contains(KbStore.SqCodesTable)) KbStore.AnnNone
-    else if (tv(KbStore.SqCodesTable) >= tv("embeddings")) KbStore.AnnCurrent
-    else KbStore.AnnStale
-  }
+  def sqIndexState: KbStore.AnnState = state(KbStore.Sq)
 
   def hasSqIndex: Boolean = sqIndexState == KbStore.AnnCurrent
 
@@ -1583,53 +1597,16 @@ final class KbStore private (
     * and versions with the manifest like any table).
     */
   def buildSqIndex(): Unit = {
-    import spark.implicits._
-    import graft.functions.FloatVecPack.floatVecPack
     require(embeddings.toDF().limit(1).count() > 0,
       "cannot build a compressed tier over an empty store")
-    val packed = embeddings.toDF()
-      .select($"id", floatVecPack($"vec").as("vec"))
-    commit(Map(KbStore.SqCodesTable ->
-      graft.ops.VectorQuant.sqEncodePacked(packed)
-        .withColumnRenamed("id", "vec_id")), identity,
-      readSet = Set("embeddings"))
+    commit(encode(KbStore.Sq,
+        embeddings.toDF().select($"id".as("vec_id"), $"vec")).adds,
+      identity, readSet = Set("embeddings"))
   }
 
-  /** Incremental catch-up, mirroring [[refreshAnnIndex]]: deleted ids
-    * tombstone, new ids encode fresh and append — since round 6's
-    * delta commits both the ENCODE work and the WRITE volume are
-    * O(changed docs).
-    */
-  def refreshSqIndex(): Unit = sqIndexState match {
-    case KbStore.AnnCurrent => ()
-    case KbStore.AnnNone => throw new IllegalStateException(
-      "no compressed tier to refresh — call buildSqIndex()")
-    case KbStore.AnnStale =>
-      import spark.implicits._
-      import graft.functions.FloatVecPack.floatVecPack
-      // changed ids via the segment route when provable (O(batch) IO,
-      // no corpus anti-join); full keyed diff otherwise
-      val (newEmb, removed) =
-        changedSince("embeddings",
-            metaCache.table_versions(KbStore.SqCodesTable)) match {
-          case Some((adds, dels)) =>
-            (adds.select($"id".as("vec_id"), $"vec"),
-              dels.select($"id".as("vec_id")))
-          case None =>
-            val emb = embeddings.toDF().select($"id".as("vec_id"), $"vec")
-            val old = read(KbStore.SqCodesTable)
-            fullDiffWithReadds(emb, old.select($"vec_id"), "vec_id",
-              "embeddings")
-        }
-      val added = graft.ops.VectorQuant.sqEncodePacked(
-          newEmb.select($"vec_id".as("id"), floatVecPack($"vec").as("vec")))
-        .withColumnRenamed("id", "vec_id")
-      // ENCODE work was already O(changed); the delta commit makes the
-      // WRITE O(changed) too (the r5 verdict's remaining disclosure)
-      commitDelta(Map(KbStore.SqCodesTable ->
-        KbStore.TablePatch(del = Some(removed), add = Some(added))), identity,
-        readSet = Set("embeddings"))
-  }
+  /** Incremental catch-up ([[refresh]]): new ids encode fresh against
+    * nothing but themselves — int8 codes need no stored model. */
+  def refreshSqIndex(): Unit = refresh(KbStore.Sq)
 
   /** Retrieval through the compressed tier: the int8 codegen'd scan
     * ranks the whole corpus in 1/4 the bytes, the top `rerank`
@@ -1640,11 +1617,7 @@ final class KbStore private (
     */
   def sqRetrieve(query: String, n: Int, provider: EmbeddingProvider,
       rerank: Int = 100): Seq[Retrieval] = {
-    require(hasSqIndex, sqIndexState match {
-      case KbStore.AnnStale =>
-        "compressed tier is stale: call refreshSqIndex() to catch it up"
-      case _ => "no compressed tier: call buildSqIndex()"
-    })
+    requireCurrent(KbStore.Sq)
     if (n <= 0) return Seq.empty
     import spark.implicits._
     import graft.functions.{FloatVecDot, Int8VecDot}
@@ -1670,10 +1643,7 @@ final class KbStore private (
       .orderBy(desc("score"), $"id")
       .limit(n)
       .as[(Long, Double)].collect()
-    if (hits.isEmpty) return Seq.empty
-    val docByEmb = docs.filter($"emb_id".isin(hits.map(_._1): _*))
-      .collect().map(d => d.emb_id.get -> d).toMap
-    hits.toSeq.map { case (embId, score) => Retrieval(score, docByEmb(embId)) }
+    retrievals(hits)
   }
 
   // ------------------------------------------------------------------
@@ -1682,15 +1652,7 @@ final class KbStore private (
   // tier for corpora whose raw vectors (and even int8 codes) no longer
   // fit the memory budget (Jégou et al. 2011)
   // ------------------------------------------------------------------
-  /** Same manifest arithmetic as the other vector families: current
-    * iff the codes table's version is at least the embeddings table's.
-    */
-  def pqIndexState: KbStore.AnnState = {
-    val tv = metaCache.table_versions
-    if (!tv.contains(KbStore.IvfPqCodesTable)) KbStore.AnnNone
-    else if (tv(KbStore.IvfPqCodesTable) >= tv("embeddings")) KbStore.AnnCurrent
-    else KbStore.AnnStale
-  }
+  def pqIndexState: KbStore.AnnState = state(KbStore.Pq)
 
   def hasPqIndex: Boolean = pqIndexState == KbStore.AnnCurrent
 
@@ -1747,12 +1709,12 @@ final class KbStore private (
     if (bucketCodes) bucketPqCodes(buckets)
   }
 
-  private def loadPqCents(): Array[(Long, Array[Float])] =
+  private[graft] def loadPqCents(): Array[(Long, Array[Float])] =
     read(KbStore.IvfPqCentroidsTable).collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).map(_.toFloat).toArray))
       .sortBy(_._1)
 
-  private def loadPqBooks(): graft.ops.VectorQuant.Codebooks = {
+  private[graft] def loadPqBooks(): graft.ops.VectorQuant.Codebooks = {
     val rows = read(KbStore.IvfPqBooksTable).collect()
       .map(r => (r.getInt(0), r.getInt(1),
         r.getSeq[Double](2).map(_.toFloat).toArray))
@@ -1760,89 +1722,51 @@ final class KbStore private (
     Array.tabulate(m)(s => rows.filter(_._1 == s).sortBy(_._2).map(_._3))
   }
 
-  /** Incremental catch-up like the other families: tombstone codes of
-    * deleted ids, residual-assign + encode new ids against the STORED
-    * centroids and codebooks — encode AND write are O(changed docs).
+  /** Incremental catch-up ([[refresh]]): residual-assign + encode new
+    * ids against the STORED centroids and codebooks, then keep a
+    * materialized bucketed mirror current ([[keepPqMirrorCurrent]]).
     */
-  def refreshPqIndex(): Unit = pqIndexState match {
-    case KbStore.AnnCurrent => ()
-    case KbStore.AnnNone => throw new IllegalStateException(
-      "no IVF-PQ index to refresh — call buildPqIndex()")
-    case KbStore.AnnStale =>
-      import spark.implicits._
-      import graft.functions.FloatVecPack.floatVecPack
-      val old = read(KbStore.IvfPqCodesTable)
-      // changed ids via the segment route when provable (O(batch) IO,
-      // no corpus anti-join); full keyed diff otherwise. `old` is
-      // still needed below for the sharded mirror's cid lookup, but in
-      // the fast path it is scanned once behind a broadcast join, not
-      // anti-joined against the corpus.
-      val (newEmb, removed) =
-        changedSince("embeddings",
-            metaCache.table_versions(KbStore.IvfPqCodesTable)) match {
-          case Some((adds, dels)) =>
-            (adds.select($"id", floatVecPack($"vec").as("vec")),
-              dels.select($"id".as("vec_id")))
-          case None =>
-            val emb = embeddings.toDF().select($"id".as("vec_id"), $"vec")
-            val (nw, rm) = fullDiffWithReadds(emb, old.select($"vec_id"),
-              "vec_id", "embeddings")
-            (nw.select($"vec_id".as("id"), floatVecPack($"vec").as("vec")),
-              rm)
-        }
-      val added = graft.ops.VectorQuant.ivfPqEncode(
-          graft.ops.VectorQuant.ivfResiduals(newEmb, loadPqCents()),
-          loadPqBooks())
-        .withColumnRenamed("id", "vec_id")
-      // mirror maintenance prep (before the commit moves the head):
-      // the shards a sharded mirror must rewrite are those containing
-      // any added or removed row's list id — `old` stays pinned to the
-      // pre-commit version paths, so this is computable either side of
-      // the commit, but the intent reads cleanest here
-      val marker = readBucketMarker()
-      val changedPps: Seq[Long] = marker match {
-        case Some((_, _, parts, _)) if parts > 0 =>
-          added.select($"cid")
-            .union(old.join(removed, Seq("vec_id")).select($"cid"))
-            .select(pmod($"cid", lit(parts.toLong)).as("pp"))
-            .distinct().as[Long].collect().toSeq
-        case _ => Nil
-      }
-      val preCodesVersion =
-        metaCache.table_versions.get(KbStore.IvfPqCodesTable)
-      commitDelta(Map(KbStore.IvfPqCodesTable ->
-        KbStore.TablePatch(del = Some(removed), add = Some(added))), identity,
-        readSet = Set("embeddings", KbStore.IvfPqCentroidsTable,
-          KbStore.IvfPqBooksTable))
-      // keep the bucketed mirror current when one was materialized. A
-      // SHARDED mirror (parts > 0) rewrites only the changed shards —
-      // O(changed lists), the same order as the delta commit itself —
-      // unless more than half the shards moved, where the full rewrite
-      // is the same volume with less bookkeeping. The sharded fast path
-      // additionally requires the marker to have named exactly the
-      // PRE-commit codes version: a mirror that had already missed an
-      // update (crash between commitDelta and the marker write, or a
-      // rebuild without bucketCodes) has unchanged shards that are
-      // older than this delta — promoting it after rewriting only this
-      // delta's shards would serve those stale rows as current. Such a
-      // mirror gets the full rebuild instead, preserving its layout
-      // (parts = 0 stays unpartitioned — writeCodesBucketed handles
-      // it). While this runs the marker still names the pre-commit
-      // version, so a concurrent pqKnnJoin falls back to the plain
-      // kernel rather than reading a half-maintained mirror; the
-      // marker flips only at the end.
-      marker.foreach { case (tbl, b, parts, mv) =>
-        if (parts > 0 && preCodesVersion.contains(mv) &&
-            changedPps.size <= parts / 2 &&
-            ensureMirrorRegistered(tbl, b, parts)) {
-          graft.ops.VectorQuant.overwriteCodeShards(
-            read(KbStore.IvfPqCodesTable).withColumnRenamed("vec_id", "id"),
-            tbl, parts, changedPps)
-          writeBucketMarker(tbl, b, parts,
-            metaCache.table_versions(KbStore.IvfPqCodesTable))
-        } else bucketPqCodes(b, parts)
-      }
-  }
+  def refreshPqIndex(): Unit = refresh(KbStore.Pq)
+
+  /** PQ's post-commit step: keep the bucketed mirror current when one
+    * was materialized. `added` are the committed code rows, `old` the
+    * codes table pinned to its pre-commit version (whose version was
+    * `preCodesVersion`), `gone` the tombstoned ids.
+    *
+    * A SHARDED mirror (parts > 0) rewrites only the changed shards —
+    * those holding any added or removed row's list id: O(changed
+    * lists), the same order as the delta commit itself — unless more
+    * than half the shards moved, where the full rewrite is the same
+    * volume with less bookkeeping. The sharded fast path additionally
+    * requires the marker to have named exactly the PRE-commit codes
+    * version: a mirror that had already missed an update (crash
+    * between the commit and the marker write, or a rebuild without
+    * bucketCodes) has unchanged shards that are older than this delta
+    * — promoting it after rewriting only this delta's shards would
+    * serve those stale rows as current. Such a mirror gets the full
+    * rebuild instead, preserving its layout (parts = 0 stays
+    * unpartitioned — writeCodesBucketed handles it). While this runs
+    * the marker still names the pre-commit version, so a concurrent
+    * pqKnnJoin falls back to the plain kernel rather than reading a
+    * half-maintained mirror; the marker flips only at the end.
+    */
+  private def keepPqMirrorCurrent(added: DataFrame, old: DataFrame,
+      preCodesVersion: Option[Long])(gone: DataFrame): Unit =
+    readBucketMarker().foreach { case (tbl, b, parts, mv) =>
+      lazy val changedPps: Seq[Long] = added.select($"cid")
+        .union(old.join(gone, Seq("vec_id")).select($"cid"))
+        .select(pmod($"cid", lit(parts.toLong)).as("pp"))
+        .distinct().as[Long].collect().toSeq
+      if (parts > 0 && preCodesVersion.contains(mv) &&
+          changedPps.size <= parts / 2 &&
+          ensureMirrorRegistered(tbl, b, parts)) {
+        graft.ops.VectorQuant.overwriteCodeShards(
+          read(KbStore.IvfPqCodesTable).withColumnRenamed("vec_id", "id"),
+          tbl, parts, changedPps)
+        writeBucketMarker(tbl, b, parts,
+          metaCache.table_versions(KbStore.IvfPqCodesTable))
+      } else bucketPqCodes(b, parts)
+    }
 
   /** Retrieval through the IVF-PQ tier: ADC over the probed lists'
     * 1-byte-per-subspace codes, exact re-rank of the top `rerank`
@@ -1852,11 +1776,7 @@ final class KbStore private (
     */
   def pqRetrieve(query: String, n: Int, provider: EmbeddingProvider,
       nProbe: Int = 8, rerank: Int = 100): Seq[Retrieval] = {
-    require(hasPqIndex, pqIndexState match {
-      case KbStore.AnnStale =>
-        "IVF-PQ index is stale: call refreshPqIndex() to catch it up"
-      case _ => "no IVF-PQ index: call buildPqIndex()"
-    })
+    requireCurrent(KbStore.Pq)
     if (n <= 0) return Seq.empty
     import spark.implicits._
     import graft.functions.FloatVecPack.floatVecPack
@@ -1869,10 +1789,7 @@ final class KbStore private (
         codes, packed, loadPqCents(), loadPqBooks(), qv,
         n, nProbe, math.max(n, rerank))
       .as[(Long, Double)].collect()
-    if (hits.isEmpty) return Seq.empty
-    val docByEmb = docs.filter($"emb_id".isin(hits.map(_._1): _*))
-      .collect().map(d => d.emb_id.get -> d).toMap
-    hits.toSeq.map { case (embId, score) => Retrieval(score, docByEmb(embId)) }
+    retrievals(hits)
   }
 
   // ------------------------------------------------------------------
@@ -1930,11 +1847,7 @@ final class KbStore private (
     * codes-exchange-free. Requires a current IVF-PQ tier.
     */
   def bucketPqCodes(buckets: Int = 32, parts: Int = 64): Unit = {
-    require(pqIndexState == KbStore.AnnCurrent, pqIndexState match {
-      case KbStore.AnnStale =>
-        "IVF-PQ index is stale: call refreshPqIndex() before bucketing"
-      case _ => "no IVF-PQ index: call buildPqIndex()"
-    })
+    requireCurrent(KbStore.Pq)
     val tbl = bucketedCodesTableName
     // A compact that found a stale marker drops the CATALOG entry but
     // leaves the external _pq_codes_data files for vacuum (a reader may
@@ -2030,11 +1943,7 @@ final class KbStore private (
     */
   def pqKnnJoin(queries: DataFrame, k: Int, nProbe: Int = 8,
       rerank: Int = 100): DataFrame = {
-    require(hasPqIndex, pqIndexState match {
-      case KbStore.AnnStale =>
-        "IVF-PQ index is stale: call refreshPqIndex() to catch it up"
-      case _ => "no IVF-PQ index: call buildPqIndex()"
-    })
+    requireCurrent(KbStore.Pq)
     import spark.implicits._
     import graft.functions.FloatVecPack.floatVecPack
     val cents = loadPqCents()
@@ -2060,15 +1969,7 @@ final class KbStore private (
   // persistent lexical (BM25) index: postings + doc lengths as a third
   // manifest-managed index family — full-text retrieval over the KB
   // ------------------------------------------------------------------
-  /** Lexical-tier lifecycle: same manifest arithmetic, keyed on the
-    * DOCS table (text, not vectors, is what it indexes).
-    */
-  def textIndexState: KbStore.AnnState = {
-    val tv = metaCache.table_versions
-    if (!tv.contains(KbStore.TextPostingsTable)) KbStore.AnnNone
-    else if (tv(KbStore.TextPostingsTable) >= tv("docs")) KbStore.AnnCurrent
-    else KbStore.AnnStale
-  }
+  def textIndexState: KbStore.AnnState = state(KbStore.Text)
 
   def hasTextIndex: Boolean = textIndexState == KbStore.AnnCurrent
 
@@ -2084,74 +1985,45 @@ final class KbStore private (
     * retrieval and refresh ALWAYS tokenize the way the index was built.
     */
   def buildTextIndex(unicode: Boolean = false): Unit = {
-    import spark.implicits._
     require(docs.limit(1).count() > 0,
       "cannot build a text index over an empty store")
-    val (postings, docLens) = graft.ops.TextRetrieval.buildIndex(
-      docs.toDF().select($"id".as("doc_id"), $"text"), unicode = unicode)
-    // postings persist PARTITIONED by a term-hash bucket: a query's
-    // terms map to ≤|terms| buckets, so the retrieval scan is physical
-    // partition pruning (1/64th of the postings per term), not a full
-    // scan with a filter
-    try commit(
-      Map(KbStore.TextPostingsTable -> KbStore.withTermBucket(postings),
-        KbStore.TextDocLensTable -> docLens),
+    val enc = textEncode(
+      docs.toDF().select($"id".as("doc_id"), $"text"), unicode)
+    try commit(enc.adds,
       m => m.copy(index_params =
         m.index_params + ("text_unicode" -> unicode.toString)),
       partitionBy = Map(KbStore.TextPostingsTable -> Seq("bucket")),
       readSet = Set("docs"))
-    finally postings.unpersist(blocking = false) // buildIndex caches
+    finally enc.cached.foreach(_.unpersist(blocking = false))
   }
 
   /** The lexical tier's persisted tokenizer choice. */
   private def textIndexUnicode: Boolean =
     metaCache.index_params.get("text_unicode").contains("true")
 
-  /** Incremental catch-up by doc id: postings/lengths of deleted docs
-    * tombstone, new docs tokenize fresh and append — TOKENIZE work and
-    * (since round 6's delta commits) WRITE volume are both O(changed
-    * docs). Text is immutable per doc id in this store (updates touch
-    * meta only), so surviving postings are never wrong, just possibly
-    * incomplete.
+  /** The text family's encode (build and refresh alike): postings and
+    * lengths of `(doc_id, text)` rows. Postings carry their term-hash
+    * bucket — the tables persist PARTITIONED by it, base and delta
+    * segments alike, so a query's terms prune the retrieval scan to
+    * ≤|terms| of 64 partitions. Both frames are cached by
+    * [[graft.ops.TextRetrieval.buildIndex]] and reported as such.
     */
-  def refreshTextIndex(): Unit = textIndexState match {
-    case KbStore.AnnCurrent => ()
-    case KbStore.AnnNone => throw new IllegalStateException(
-      "no text index to refresh — call buildTextIndex()")
-    case KbStore.AnnStale =>
-      import spark.implicits._
-      // changed ids via the segment route when provable (O(batch) IO,
-      // no corpus anti-join); full keyed diff otherwise
-      val (newDocs, goneIds) =
-        changedSince("docs",
-            metaCache.table_versions(KbStore.TextPostingsTable)) match {
-          case Some((adds, dels)) =>
-            (adds.select($"id".as("doc_id"), $"text"),
-              dels.select($"id".as("doc_id")))
-          case None =>
-            val live = docs.toDF().select($"id".as("doc_id"), $"text")
-            val oldLens = read(KbStore.TextDocLensTable)
-            fullDiffWithReadds(live, oldLens.select($"doc_id"), "doc_id",
-              "docs")
-        }
-      // tokenize the catch-up batch exactly as the original build did
-      val (addPost, addLens) =
-        graft.ops.TextRetrieval.buildIndex(newDocs, unicode = textIndexUnicode)
-      // one tombstone set (the doc ids that left) covers both tables —
-      // postings and lengths are keyed by doc_id; TOKENIZE work is
-      // O(changed docs) and now the WRITE is too. New postings bucket
-      // identically to the stored ones and the add segment persists
-      // partitioned by bucket, so retrieval's partition pruning spans
-      // base and deltas alike.
-      try commitDelta(Map(
-        KbStore.TextPostingsTable -> KbStore.TablePatch(
-          del = Some(goneIds),
-          add = Some(KbStore.withTermBucket(addPost))),
-        KbStore.TextDocLensTable -> KbStore.TablePatch(
-          del = Some(goneIds), add = Some(addLens))),
-        identity, readSet = Set("docs"))
-      finally addPost.unpersist(blocking = false) // buildIndex caches
+  private def textEncode(rows: DataFrame,
+      unicode: Boolean): KbStore.Encoded = {
+    val (postings, docLens) =
+      graft.ops.TextRetrieval.buildIndex(rows, unicode = unicode)
+    KbStore.Encoded(
+      Map(KbStore.TextPostingsTable -> KbStore.withTermBucket(postings),
+        KbStore.TextDocLensTable -> docLens),
+      cached = Seq(postings, docLens))
   }
+
+  /** Incremental catch-up by doc id ([[refresh]]), tokenized exactly as
+    * the build did. Text is immutable per doc id in this store
+    * (updates touch meta only), so surviving postings are never wrong,
+    * just possibly incomplete.
+    */
+  def refreshTextIndex(): Unit = refresh(KbStore.Text)
 
   /** BM25 retrieval through the persistent postings: scores only the
     * query terms' posting rows (document frequencies and corpus stats
@@ -2160,11 +2032,7 @@ final class KbStore private (
     * query matches the index build's.
     */
   def bm25Retrieve(query: String, n: Int): Seq[(Double, Doc)] = {
-    require(hasTextIndex, textIndexState match {
-      case KbStore.AnnStale =>
-        "text index is stale: call refreshTextIndex() to catch it up"
-      case _ => "no text index: call buildTextIndex()"
-    })
+    requireCurrent(KbStore.Text)
     if (n <= 0) return Seq.empty
     import spark.implicits._
     // tokenize the query with the tokenizer the index was BUILT with
@@ -2182,8 +2050,7 @@ final class KbStore private (
         terms, n)
       .as[(Long, Double)].collect()
     if (hits.isEmpty) return Seq.empty
-    val byId = docs.filter($"id".isin(hits.map(_._1): _*))
-      .collect().map(d => d.id -> d).toMap
+    val byId = docsById(hits.map(_._1))
     hits.toSeq.map { case (id, score) => (score, byId(id)) }
   }
 
@@ -2198,11 +2065,7 @@ final class KbStore private (
     */
   def rm3Retrieve(query: String, n: Int, fbDocs: Int = 10,
       fbTerms: Int = 10, alpha: Double = 0.5): Seq[(Double, Doc)] = {
-    require(hasTextIndex, textIndexState match {
-      case KbStore.AnnStale =>
-        "text index is stale: call refreshTextIndex() to catch it up"
-      case _ => "no text index: call buildTextIndex()"
-    })
+    requireCurrent(KbStore.Text)
     if (n <= 0) return Seq.empty
     import spark.implicits._
     val terms = graft.ops.TextRetrieval.tokenizeQuery(query, textIndexUnicode)
@@ -2221,8 +2084,7 @@ final class KbStore private (
         weights.toSeq.toDF("term", "w"), n)
       .as[(Long, Double)].collect()
     if (hits.isEmpty) return Seq.empty
-    val byId = docs.filter($"id".isin(hits.map(_._1): _*))
-      .collect().map(d => d.id -> d).toMap
+    val byId = docsById(hits.map(_._1))
     hits.toSeq.map { case (id, score) => (score, byId(id)) }
   }
 
@@ -2236,17 +2098,7 @@ final class KbStore private (
   // O(batch + matched bands): one equi-join of the batch's bands
   // against the stored table.
   // ------------------------------------------------------------------
-  /** Dedup-tier lifecycle: keyed on the DOCS table like the lexical
-    * family (signatures derive from text, and text is immutable per
-    * doc id here — surviving bands are never wrong, just possibly
-    * incomplete).
-    */
-  def dedupIndexState: KbStore.AnnState = {
-    val tv = metaCache.table_versions
-    if (!tv.contains(KbStore.DedupBandsTable)) KbStore.AnnNone
-    else if (tv(KbStore.DedupBandsTable) >= tv("docs")) KbStore.AnnCurrent
-    else KbStore.AnnStale
-  }
+  def dedupIndexState: KbStore.AnnState = state(KbStore.Dedup)
 
   def hasDedupIndex: Boolean = dedupIndexState == KbStore.AnnCurrent
 
@@ -2308,37 +2160,11 @@ final class KbStore private (
       readSet = Set("docs"))
   }
 
-  /** Incremental catch-up by doc id, mirroring [[refreshTextIndex]]:
-    * bands of departed docs tombstone, new docs shingle+sign fresh and
-    * append — SIGNATURE work and WRITE volume are both O(changed docs).
+  /** Incremental catch-up by doc id ([[refresh]]): new docs shingle
+    * and sign under the stored MinHash parameters. Like the text tier,
+    * surviving bands are never wrong, just possibly incomplete.
     */
-  def refreshDedupIndex(): Unit = dedupIndexState match {
-    case KbStore.AnnCurrent => ()
-    case KbStore.AnnNone => throw new IllegalStateException(
-      "no dedup index to refresh — call buildDedupIndex()")
-    case KbStore.AnnStale =>
-      import spark.implicits._
-      val (k, nh, rpb, uni) = dedupParams
-      // changed ids via the segment route when provable (O(batch) IO,
-      // no corpus anti-join); full keyed diff otherwise
-      val (newDocs, goneIds) =
-        changedSince("docs",
-            metaCache.table_versions(KbStore.DedupBandsTable)) match {
-          case Some((adds, dels)) =>
-            (adds.select($"id".as("doc_id"), $"text"),
-              dels.select($"id".as("doc_id")))
-          case None =>
-            val live = docs.toDF().select($"id".as("doc_id"), $"text")
-            val stored = read(KbStore.DedupBandsTable)
-              .select($"doc_id").distinct()
-            fullDiffWithReadds(live, stored, "doc_id", "docs")
-        }
-      commitDelta(Map(
-        KbStore.DedupBandsTable -> KbStore.TablePatch(
-          del = Some(goneIds),
-          add = Some(dedupBandsFor(newDocs, k, nh, rpb, uni)))),
-        identity, readSet = Set("docs"))
-  }
+  def refreshDedupIndex(): Unit = refresh(KbStore.Dedup)
 
   /** Screen a PRE-INGEST batch `(doc_id, text)` against the archive
     * (and against itself): returns the verified near-dup pairs
@@ -2373,11 +2199,7 @@ final class KbStore private (
     */
   private[graft] def dedupCandidatesWithCleanup(batch: DataFrame,
       threshold: Double = 0.8): (DataFrame, () => Unit) = {
-    require(hasDedupIndex, dedupIndexState match {
-      case KbStore.AnnStale =>
-        "dedup index is stale: call refreshDedupIndex() to catch it up"
-      case _ => "no dedup index: call buildDedupIndex()"
-    })
+    requireCurrent(KbStore.Dedup)
     import spark.implicits._
     val (k, nh, rpb, uni) = dedupParams
     val shB = graft.ops.Dedup.shingles(batch, k, unicode = uni)
@@ -2407,7 +2229,7 @@ final class KbStore private (
     require(!batch.columns.contains(pid),
       s"screenBatch appends a $pid column; the batch already has one " +
         "(re-screening an exported screen result? drop it first)")
-    if (dedupIndexState == KbStore.AnnStale) refreshDedupIndex()
+    refreshIfStale(KbStore.Dedup)
     // provisional ids disjoint from (and ABOVE) the store's dense id
     // space, order-stable so keep-first is well-defined — appended as
     // a COLUMN so the batch's other columns survive the screen
@@ -2497,9 +2319,8 @@ final class KbStore private (
     */
   private[graft] def semanticDropHits(batchVec: DataFrame,
       cosThreshold: Double, nProbe: Int = 8): DataFrame = {
-    if (annIndexState == KbStore.AnnStale) refreshAnnIndex()
-    require(hasAnnIndex,
-      "no ANN index: call buildAnnIndex() before semantic screening")
+    refreshIfStale(KbStore.Ann)
+    requireCurrent(KbStore.Ann)
     import graft.functions.FloatVecPack.floatVecPack
     val centRows = read(KbStore.IvfCentroidsTable).collect()
     val nlist = centRows.length
@@ -2560,9 +2381,8 @@ final class KbStore private (
     require(!batch.columns.contains("vec"),
       "screenBatchSemantic embeds the batch itself; drop the existing " +
         "vec column (or commit via bulkAddDocsDistributed directly)")
-    if (annIndexState == KbStore.AnnStale) refreshAnnIndex()
-    require(hasAnnIndex,
-      "no ANN index: call buildAnnIndex() before semantic screening")
+    refreshIfStale(KbStore.Ann)
+    requireCurrent(KbStore.Ann)
     val base = metaCache.max_doc_id + 1L
     val provisional = spark.createDataFrame(
       batch.rdd.zipWithIndex().map { case (r, i) =>
@@ -2626,9 +2446,7 @@ final class KbStore private (
         val survivors = kept.count() // cached by the screen — O(metadata)
         if (survivors > 0) {
           bulkAddDocsDistributed(kept, provider)
-          if (lexicalThreshold.isDefined &&
-              dedupIndexState == KbStore.AnnStale)
-            refreshDedupIndex()
+          if (lexicalThreshold.isDefined) refreshIfStale(KbStore.Dedup)
           refreshAnnIndex()
         }
         val total = if (lexTotal >= 0) lexTotal else semTotal
@@ -2723,18 +2541,8 @@ final class KbStore private (
     // the compressed tier is current, and vice versa): stale families
     // keep their old pointers (still stale after the bump) and their
     // refresh then compacts them naturally.
-    val staleIdx: Set[String] =
-      (if (annIndexState == KbStore.AnnStale) KbStore.AnnIndexTables
-       else Seq.empty[String]).toSet ++
-        (if (sqIndexState == KbStore.AnnStale) Set(KbStore.SqCodesTable)
-         else Set.empty[String]) ++
-        (if (pqIndexState == KbStore.AnnStale) KbStore.IvfPqTables.toSet
-         else Set.empty[String]) ++
-        (if (textIndexState == KbStore.AnnStale) KbStore.TextIndexTables.toSet
-         else Set.empty[String]) ++
-        (if (dedupIndexState == KbStore.AnnStale)
-           KbStore.DedupIndexTables.toSet
-         else Set.empty[String])
+    val staleIdx = KbStore.Families
+      .filter(state(_) == KbStore.AnnStale).flatMap(_.tables).toSet
     val names = metaCache.table_versions.keys.filterNot(staleIdx.contains)
     // captured BEFORE the commit moves the head: the marker bump below
     // is only sound for a mirror that was current going in
@@ -2839,7 +2647,7 @@ final class KbStore private (
         // filesystem races (a dir vanishing between list and probe, an
         // unreadable dir) skip that entry, never abort the whole sweep
         val ours = Files.isDirectory(p) && !known.contains(name) &&
-          (KbStore.IndexTables.contains(name) ||
+          (KbStore.Families.exists(_.tables.contains(name)) ||
             (try KbStore.isVersionedTableDir(p)
              catch { case _: java.io.IOException |
                           _: java.io.UncheckedIOException => false }))
@@ -3069,8 +2877,6 @@ object KbStore {
   val IvfPqCentroidsTable = "ivfpq_centroids"
   val IvfPqBooksTable = "ivfpq_books"
   val IvfPqCodesTable = "ivfpq_codes"
-  val IvfPqTables: Seq[String] =
-    Seq(IvfPqCentroidsTable, IvfPqBooksTable, IvfPqCodesTable)
   /** Lexical (BM25) tier: postings + doc lengths, keyed on `docs`. */
   val TextPostingsTable = "text_postings"
   val TextDocLensTable = "text_doclens"
@@ -3101,19 +2907,56 @@ object KbStore {
     postings.withColumn("bucket",
       (crc32(col("term").cast("binary")) % TextBuckets).cast("int"))
 
-  /** The ANN index family (invalidated/refreshed together). */
-  val AnnIndexTables: Seq[String] = Seq(IvfCentroidsTable, IvfAssignTable)
-  /** Vector-derived families — dropped when a vector is REPLACED. */
-  val VectorIndexTables: Seq[String] =
-    (AnnIndexTables :+ SqCodesTable) ++ IvfPqTables
-  /** The text family survives vector replacement (it indexes text). */
-  val TextIndexTables: Seq[String] = Seq(TextPostingsTable, TextDocLensTable)
-  /** The dedup-signature family — text-derived like the lexical tier,
-    * so it likewise survives vector replacement. */
-  val DedupIndexTables: Seq[String] = Seq(DedupBandsTable)
-  /** Every index-family table (vacuum ownership, compact bookkeeping). */
-  val IndexTables: Seq[String] =
-    VectorIndexTables ++ TextIndexTables ++ DedupIndexTables
+  /** One persisted derived-index family. All five share one lifecycle
+    * — a freshness watermark ([[KbStore.state]]), a stale-or-missing
+    * guard and an incremental refresh ([[KbStore.refresh]]) — and
+    * differ only in what they encode; this descriptor is the part of a
+    * family that is data.
+    *
+    * @param name   method-name stem (`build<name>Index`, `refresh<name>Index`)
+    * @param label  the family in messages
+    * @param source the data table it derives from (`embeddings` or `docs`)
+    * @param keyed  the tables refresh maintains row-per-key by delta
+    *               commits; the first is the coverage watermark, the
+    *               last holds exactly one row per covered key
+    * @param model  tables the build trains and refresh only reads
+    * @param key    key column of the keyed tables (the source's `id`)
+    */
+  private[graft] final case class Family(name: String, label: String,
+      source: String, keyed: Seq[String], model: Seq[String], key: String) {
+    /** The table whose manifest version is the coverage watermark. */
+    def watermark: String = keyed.head
+    def tables: Seq[String] = model ++ keyed
+    /** Vector-derived families are dropped when a vector is REPLACED;
+      * text-derived ones survive it. */
+    def vectorDerived: Boolean = source == "embeddings"
+    /** The source column the family encodes. */
+    def payload: String = if (vectorDerived) "vec" else "text"
+  }
+
+  private[graft] val Ann = Family("Ann", "ANN index", "embeddings",
+    Seq(IvfAssignTable), Seq(IvfCentroidsTable), "vec_id")
+  private[graft] val Sq = Family("Sq", "compressed tier", "embeddings",
+    Seq(SqCodesTable), Nil, "vec_id")
+  private[graft] val Pq = Family("Pq", "IVF-PQ index", "embeddings",
+    Seq(IvfPqCodesTable), Seq(IvfPqCentroidsTable, IvfPqBooksTable), "vec_id")
+  private[graft] val Text = Family("Text", "text index", "docs",
+    Seq(TextPostingsTable, TextDocLensTable), Nil, "doc_id")
+  private[graft] val Dedup = Family("Dedup", "dedup index", "docs",
+    Seq(DedupBandsTable), Nil, "doc_id")
+
+  /** Every family, in refresh order: PQ last, because its refresh also
+    * keeps the bucketed codes mirror current. */
+  private[graft] val Families: Seq[Family] =
+    Seq(Ann, Sq, Text, Dedup, Pq)
+
+  /** What a family's encode step hands the refresh driver: the rows to
+    * append per keyed table, every DataFrame the step cached (the
+    * driver unpersists them once the commit is done), and a step to
+    * run after the commit, given the keys it tombstoned. */
+  private final case class Encoded(adds: Map[String, DataFrame],
+      cached: Seq[DataFrame] = Nil,
+      afterCommit: DataFrame => Unit = _ => ())
 
   sealed trait AnnState
   case object AnnNone extends AnnState
@@ -3160,11 +3003,8 @@ object KbStore {
   val DeltaKeys: Map[String, Seq[String]] = Map(
     "docs" -> Seq("id"), "embeddings" -> Seq("id"),
     "edges" -> Seq("id"), "keyval" -> Seq("key"),
-    StatsTable -> Seq("metric"),
-    IvfAssignTable -> Seq("vec_id"), SqCodesTable -> Seq("vec_id"),
-    IvfPqCodesTable -> Seq("vec_id"),
-    TextPostingsTable -> Seq("doc_id"), TextDocLensTable -> Seq("doc_id"),
-    DedupBandsTable -> Seq("doc_id"))
+    StatsTable -> Seq("metric")) ++
+    Families.flatMap(f => f.keyed.map(_ -> Seq(f.key)))
 
   /** Physical layout add-segments (and chain-overflow rewrites) must
     * preserve — the postings' term-bucket partitioning is what makes

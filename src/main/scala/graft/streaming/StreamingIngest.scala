@@ -514,37 +514,19 @@ object StreamingIngest {
             (kept, cleanup)
           case None => (batch, () => ())
         }
-      // keep whichever index families exist live. Refresh COMPUTE is
-      // O(this batch) against the stored centroids / encoder, but each
-      // refresh commit rewrites its index table (the versioned-table
-      // write model) — for high-frequency micro-batches over a huge
-      // store, prefer maintainIndex = false + periodic refresh.
+      // keep whichever index families exist live: each stale family
+      // refreshes against its stored model in O(this batch), in
+      // descriptor order — the dedup family bands only this batch's
+      // docs, so the next batch screens against the whole history
+      // without a rescan, and the IVF-PQ tier comes last because its
+      // refresh also keeps a materialized bucketed-codes mirror current.
       // Runs on EVERY applied batch, including the all-dups early exit
       // below: families left stale by a prior crash (commit landed,
       // refresh didn't) must not stay stale just because the next
       // batches happen to be all duplicates — maintainIndex promises
       // per-batch liveness, not per-non-empty-batch liveness.
-      def refreshStaleFamilies(): Unit = if (maintainIndex) {
-        if (kb.annIndexState == graft.core.KbStore.AnnStale)
-          kb.refreshAnnIndex()
-        if (kb.sqIndexState == graft.core.KbStore.AnnStale)
-          kb.refreshSqIndex()
-        if (kb.textIndexState == graft.core.KbStore.AnnStale)
-          kb.refreshTextIndex()
-        // the dedup-signature family refreshes like the text tier (band
-        // ONLY this batch's docs against the stored MinHash parameters),
-        // so a continuously ingesting store can screen every next batch
-        // against its whole history via dedupCandidates without a rescan
-        if (kb.dedupIndexState == graft.core.KbStore.AnnStale)
-          kb.refreshDedupIndex()
-        // the IVF-PQ tier refreshes like the others (encode O(batch)
-        // against the stored centroids/codebooks); its refresh also
-        // keeps a materialized bucketed-codes mirror current, so a
-        // streaming store serves the exchange-free pqKnnJoin path
-        // continuously
-        if (kb.pqIndexState == graft.core.KbStore.AnnStale)
-          kb.refreshPqIndex()
-      }
+      def refreshStaleFamilies(): Unit = if (maintainIndex)
+        graft.core.KbStore.Families.foreach(kb.refreshIfStale)
       try {
         if (toAdd.isEmpty) {
           // every doc was a dup: still advance the marker so a replay

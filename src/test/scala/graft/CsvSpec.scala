@@ -14,7 +14,7 @@ class CsvSpec extends SparkSpec {
     StructField("doc_id", LongType), StructField("text", StringType)))
 
   test("csv: parse-and-quarantine splits malformed and missing rows") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-csv")
+    val dir = SparkSpec.tempDir("graft-csv")
     val src = dir.resolve("shard.csv")
     java.nio.file.Files.write(src, java.util.Arrays.asList(
       """1,"plain row"""",
@@ -57,7 +57,7 @@ class CsvSpec extends SparkSpec {
 
   test("csv: write/read round trip is lossless incl quotes and commas") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-csv-rt")
+    val dir = SparkSpec.tempDir("graft-csv-rt")
     val df = Seq(
       (1L, """a "quoted" phrase"""),
       (2L, "comma, separated, values"),

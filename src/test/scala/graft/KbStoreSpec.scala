@@ -11,7 +11,7 @@ import graft.core.Embeddings.{EmbeddingProvider, KeywordProvider, MockProvider}
 class KbStoreSpec extends SparkSpec {
 
   private def freshPath(): String =
-    Files.createTempDirectory("graft-kb").resolve("kb").toString
+    SparkSpec.tempDir("graft-kb").resolve("kb").toString
 
   private def unitProvider(dim: Int): EmbeddingProvider = MockProvider(dim)
 

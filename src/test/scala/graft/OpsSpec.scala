@@ -809,8 +809,7 @@ class OpsSpec extends SparkSpec {
     // metadata) and the same RELATIONAL core (blocked = false): the
     // only plan difference must be the extra candidate-side Exchange
     // the bucketed layout amortizes away
-    val plainDir = java.nio.file.Files
-      .createTempDirectory("knn-plain").toString
+    val plainDir = SparkSpec.tempDir("knn-plain").toString
     spark.table("knn_bucketed_spec").write.mode("overwrite").parquet(plainDir)
     val plainDf = SimilaritySearch.knnJoinIvfAssigned(pq,
       spark.read.parquet(plainDir), packedCents, k = 5, nProbe = 8,
@@ -1038,7 +1037,7 @@ class OpsSpec extends SparkSpec {
 
   test("csv ingestion: trim + distinct (S9 notebook pipeline)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-csv")
+    val dir = SparkSpec.tempDir("graft-csv")
     val f = dir.resolve("jokes.csv")
     java.nio.file.Files.writeString(f,
       "joke\n  why did the chicken  \nwhy did the chicken\nsecond joke\n")
@@ -1850,7 +1849,7 @@ class OpsSpec extends SparkSpec {
 
   test("jsonl: parse-and-quarantine round trip") {
     import org.apache.spark.sql.types._
-    val dir = java.nio.file.Files.createTempDirectory("graft-jsonl")
+    val dir = SparkSpec.tempDir("graft-jsonl")
     val src = dir.resolve("shard.jsonl")
     java.nio.file.Files.write(src, java.util.Arrays.asList(
       """{"doc_id": 1, "text": "hello world", "lang": "en"}""",

@@ -20,7 +20,7 @@ import graft.core.KbStore
 class RefreshFastPathSpec extends SparkSpec {
 
   private def freshPath(): String =
-    Files.createTempDirectory("graft-rfp").resolve("kb").toString
+    SparkSpec.tempDir("graft-rfp").resolve("kb").toString
 
   /** Route-engagement probe (r13 verdict item 3): a refresh's parity
     * with the fallback is vacuous if the fast path silently stopped
@@ -80,54 +80,109 @@ class RefreshFastPathSpec extends SparkSpec {
   private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
 
+  /** Rows as comparable strings: binary codes hex-encoded (a raw
+    * Array[Byte] prints its identity hash). */
+  private def canonRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.map {
+      case b: Array[Byte] => b.map("%02x".format(_)).mkString
+      case v => String.valueOf(v)
+    }.mkString("|")).sorted.toSeq
+
   test("segment-route refresh == full rebuild for every family") {
     import spark.implicits._
+    import graft.functions.FloatVecPack.floatVecPack
     val kb = KbStore.create(spark, freshPath(), provider.params,
       forceFresh = true)
     kb.bulkAddDocsDistributed(texts(40).toDF("text"), provider)
-    kb.buildAnnIndex(nlist = 4, iters = 1)
-    kb.buildSqIndex()
-    kb.buildTextIndex()
-    kb.buildDedupIndex()
+    def stored(t: String, cols: String*): Seq[String] =
+      canonRows(kb.readTableForSpec(t).select(cols.map(col): _*))
+    def liveDocs = kb.docs.toDF().select($"id".as("doc_id"), $"text")
+    def packed = kb.embeddings.toDF()
+      .select($"id", floatVecPack($"vec").as("vec"))
+    // per family: its build, and (stored rows, a from-scratch encode of
+    // the live rows under the STORED model) for each table it keys
+    type Check = () => Seq[(Seq[String], Seq[String])]
+    val cases: Map[KbStore.Family, (() => Unit, Check)] = Map(
+      KbStore.Ann -> ((() => kb.buildAnnIndex(nlist = 4, iters = 1), () => {
+        val fresh = graft.ops.SimilaritySearch.ivfAssign(
+          kb.embeddings.toDF().select($"id".as("vec_id"),
+            $"vec".as("embedding")),
+          kb.readTableForSpec(KbStore.IvfCentroidsTable))
+        Seq(stored(KbStore.IvfAssignTable, "vec_id", "cid") ->
+          canonRows(fresh.select($"vec_id", $"cid")))
+      })),
+      KbStore.Sq -> ((() => kb.buildSqIndex(), () => {
+        val fresh = graft.ops.VectorQuant.sqEncodePacked(packed)
+          .withColumnRenamed("id", "vec_id")
+        Seq(stored(KbStore.SqCodesTable, fresh.columns.toSeq: _*) ->
+          canonRows(fresh))
+      })),
+      KbStore.Pq -> ((() =>
+        kb.buildPqIndex(nlist = 4, m = 4, ncodes = 16, iters = 1), () => {
+        val fresh = graft.ops.VectorQuant.ivfPqEncode(
+            graft.ops.VectorQuant.ivfResiduals(packed, kb.loadPqCents()),
+            kb.loadPqBooks())
+          .withColumnRenamed("id", "vec_id")
+        Seq(stored(KbStore.IvfPqCodesTable, fresh.columns.toSeq: _*) ->
+          canonRows(fresh))
+      })),
+      KbStore.Text -> ((() => kb.buildTextIndex(), () => {
+        val (post, lens) = graft.ops.TextRetrieval.buildIndex(liveDocs)
+        try Seq(
+          stored(KbStore.TextPostingsTable, "doc_id", "term", "tf") ->
+            canonRows(post.select($"doc_id", $"term", $"tf")),
+          stored(KbStore.TextDocLensTable, "doc_id", "dl") ->
+            canonRows(lens.select($"doc_id", $"dl")))
+        finally { post.unpersist(); lens.unpersist() }
+      })),
+      KbStore.Dedup -> ((() => kb.buildDedupIndex(), () => {
+        // default MinHash parameters: k = 3, 8 hashes, 2 rows per band
+        val fresh = graft.ops.Dedup.bandKeys(
+            graft.ops.Dedup.minhashSignatures(
+              graft.ops.Dedup.shingles(liveDocs, 3), 8), 2)
+          .select($"doc_id", $"band".cast("long"), $"key")
+        val bands = kb.readTableForSpec(KbStore.DedupBandsTable)
+        Seq(canonRows(bands.where($"band" >= 0L)
+            .select($"doc_id", $"band", $"key")) -> canonRows(fresh),
+          // every live doc is covered, by bands or a short-doc sentinel
+          canonRows(bands.select($"doc_id").distinct()) ->
+            canonRows(liveDocs.select($"doc_id")))
+      })))
+    assert(cases.keySet == KbStore.Families.toSet)
+    KbStore.Families.foreach(f => cases(f)._1())
 
-    // two delta commits + a delete: the index families go stale across
-    // a multi-segment window, then one refresh catches each up
+    // two delta commits + a delete: the families go stale across a
+    // multi-segment window, then one refresh catches each up
     kb.bulkAddDocsDistributed(texts(15, offset = 100).toDF("text"), provider)
     kb.bulkDelDocs(Seq(3L, 41L))
     kb.bulkAddDocsDistributed(texts(5, offset = 200).toDF("text"), provider)
 
-    assert(kb.annIndexState == KbStore.AnnStale)
-    kb.refreshAnnIndex(); assertRoute(kb, "segment")
-    kb.refreshSqIndex(); assertRoute(kb, "segment")
-    kb.refreshTextIndex(); assertRoute(kb, "segment")
-    kb.refreshDedupIndex(); assertRoute(kb, "segment")
-    assert(kb.annIndexState == KbStore.AnnCurrent)
-    assert(kb.sqIndexState == KbStore.AnnCurrent)
-    assert(kb.textIndexState == KbStore.AnnCurrent)
-    assert(kb.dedupIndexState == KbStore.AnnCurrent)
+    KbStore.Families.foreach { f =>
+      assert(kb.state(f) == KbStore.AnnStale, f.label)
+      kb.refresh(f); assertRoute(kb, "segment")
+      assert(kb.state(f) == KbStore.AnnCurrent, f.label)
+      cases(f)._2().foreach { case (got, want) =>
+        assert(got == want, s"${f.label}: refreshed rows != fresh encode")
+      }
+    }
+  }
 
-    // ground truth: the refreshed assignment covers exactly the live
-    // embedding ids, each assigned to its nearest STORED centroid —
-    // i.e. what a fresh assignment over the live table would produce
-    val liveIds = kb.embeddings.toDF().select($"id").as[Long]
-      .collect().toSet
-    val assign = kb.readTableForSpec(KbStore.IvfAssignTable)
-    assert(assign.select($"vec_id").as[Long].collect().toSet == liveIds)
-    val sq = kb.readTableForSpec(KbStore.SqCodesTable)
-    assert(sq.select($"vec_id").as[Long].collect().toSet == liveIds)
-    val lens = kb.readTableForSpec(KbStore.TextDocLensTable)
-    assert(lens.select($"doc_id").as[Long].collect().toSet == liveIds)
-    val bands = kb.readTableForSpec(KbStore.DedupBandsTable)
-    assert(bands.select($"doc_id").distinct().as[Long].collect().toSet
-      == liveIds)
-
-    // the refreshed ANN assignment equals a from-scratch assignment of
-    // the live embeddings to the SAME stored centroids (row-for-row)
-    val cents = kb.readTableForSpec(KbStore.IvfCentroidsTable)
-    val fresh = graft.ops.SimilaritySearch.ivfAssign(
-      kb.embeddings.toDF().select($"id".as("vec_id"),
-        $"vec".as("embedding")), cents).select($"vec_id", $"cid")
-    assert(sortedRows(assign.select($"vec_id", $"cid")) == sortedRows(fresh))
+  test("text family: build and refresh leave no cached DataFrame behind") {
+    import spark.implicits._
+    val kb = KbStore.create(spark, freshPath(), provider.params,
+      forceFresh = true)
+    kb.bulkAddDocsDistributed(texts(30).toDF("text"), provider)
+    val before = spark.sparkContext.getPersistentRDDs.size
+    kb.buildTextIndex()
+    (0 until 3).foreach { i =>
+      kb.bulkAddDocsDistributed(
+        texts(5, offset = 500 + 10 * i).toDF("text"), provider)
+      kb.refreshTextIndex()
+    }
+    assert(kb.hasTextIndex)
+    val after = spark.sparkContext.getPersistentRDDs.size
+    assert(after == before,
+      s"buildTextIndex/refreshTextIndex left ${after - before} cached RDDs")
   }
 
   test("fallback (base moved by compact) == segment-route refresh") {
